@@ -199,9 +199,7 @@ def minhash_near_dup_pairs(
     blocks = blocks.observe(obs, F.count(F.lit(1)).alias("n"))
     blocks = blocks.localCheckpoint(eager=True)
     if not verify_exact:
-        return candidate_pairs(blocks, id_col="_id", salt_cap=salt_cap).select(
-            "left", "right"
-        )
+        return candidate_pairs(blocks, id_col="_id", salt_cap=salt_cap)
     if broadcast_features is None:
         n_docs = obs.get["n"] / (num_bands + 1)
         broadcast_features = n_docs <= 200_000
@@ -243,9 +241,7 @@ def minhash_near_dup_pairs(
     # dedup-first: cross-band duplicate pairs would multiply the (array-
     # copying) feature joins, and the pair stream is just two int64 columns —
     # the cheapest thing in this plan to shuffle
-    pairs = candidate_pairs(
-        blocks, id_col="_id", salt_cap=salt_cap, keep_block_key=False
-    )
+    pairs = candidate_pairs(blocks, id_col="_id", salt_cap=salt_cap)
     # both-empty token sets: duplicate ONLY when content is identical
     empty_case = F.when(F.col("_sha_a") == F.col("_sha_b"), F.lit(1.0)).otherwise(
         F.lit(0.0)

@@ -22,8 +22,8 @@ Round-cost design (round-3 rework, VERDICT r2 item 2; round-6 trim):
   emit duplicate rows (bounded by in-degree); small-star's windows are
   duplicate-insensitive and its distinct re-canonicalizes the round;
 - the convergence fingerprint rides the SAME action that materializes the
-  per-round localCheckpoint (`df.observe` + eager checkpoint), so the
-  extra full pass per round that _fingerprint() used to cost is gone;
+  per-round localCheckpoint (`df.observe` + eager checkpoint), so it costs
+  no extra pass over the edge set;
 - lineage is truncated with localCheckpoint every round (iterative
   self-joins otherwise double the plan each iteration — SURVEY.md §7.4
   risk 3). localCheckpoint stores partitions non-replicated: on a
@@ -114,15 +114,9 @@ def _small_star(e: DataFrame) -> DataFrame:
     return out.distinct()
 
 
-def _fingerprint(e: DataFrame) -> tuple:
-    """Order-insensitive identity of an edge set (count + two independent
-    hash sums). Standalone form — the CC loop folds the same aggregates
-    into the checkpoint action via observe() instead of calling this."""
-    row = e.agg(*_fp_aggs()).collect()[0]
-    return (row["n"], str(row["h1"]), str(row["h2"]))
-
-
 def _fp_aggs() -> list:
+    """Order-insensitive identity of an edge set: count + two independent
+    hash sums."""
     return [
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h1"),

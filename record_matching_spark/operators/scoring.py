@@ -338,8 +338,8 @@ def _cos_jac_batch(tid_l, tw_l, tid_r, tw_r, n: int):
 
 
 # Mask-scatter vs per-string-loop crossover for _pad_codepoints, measured
-# at n=20k uniform-length batches (scripts/pad_codepoints_ab.py): mask
-# 1.18x at 150, ~parity at 200-250, 0.74-0.77x at 300-400.
+# at n=20k uniform-length batches (BENCH.md "_pad_codepoints vectorization
+# A/B"): mask 1.18x at 150, ~parity at 200-250, 0.74-0.77x at 300-400.
 _PAD_MASK_MAX_L = 192
 
 
@@ -349,10 +349,10 @@ def _pad_codepoints(strs: list) -> tuple[np.ndarray, np.ndarray]:
     join+encode+frombuffer and a single BOOLEAN-MASK scatter — no
     per-string Python loop (VERDICT r4 item 7). Mask assignment fills in
     row-major order, each row's first len(s) slots, which is exactly the
-    concatenated encode order. Measured (scripts/pad_codepoints_ab.py):
-    mask beats the loop 4.4x/1.6x/1.2x at Lmax 30/120/150 but LOSES
-    ~0.75x past Lmax~250 (the n*Lmax mask dominates), so batches with
-    Lmax > _PAD_MASK_MAX_L fall back to the per-string loop — same
+    concatenated encode order. Measured (BENCH.md "_pad_codepoints
+    vectorization A/B"): mask beats the loop 4.4x/1.6x/1.2x at Lmax
+    30/120/150 but LOSES ~0.75x past Lmax~250 (the n*Lmax mask
+    dominates), so batches with Lmax > _PAD_MASK_MAX_L fall back to the per-string loop — same
     outputs, property-pinned by test_jw_vectorized_matches_scalar. The
     integer fancy-index variant lost at long lengths too (0.37x)."""
     n = len(strs)

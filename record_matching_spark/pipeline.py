@@ -8,7 +8,7 @@ Parquet directory and the per-stage CLI restarts anywhere,
   s1_normalized   ingest + sha invariant + tokenize        (main.py:75-93)
   s2_sha_features per-distinct-content TF-IDF/signature    (main.py:96-144)
   s3_blocks       minhash-LSH + token-sorted blocking keys (main.py:148-191)
-  s4_pairs        salted self-join candidate pairs         (main.py:552-577)
+  s4_pairs        distinct (left, right) candidate pairs   (main.py:552-577)
   s5_features     batched pair similarity features         (main.py:353-434)
   s6_scores       sigmoid(w·x+b) match scores              (main.py:606-626)
   s7_clusters     large-star/small-star transitive closure (main.py:629-651)
@@ -69,10 +69,6 @@ class PipelineConfig:
     # 64 = int64 surrogate ids (default); 128 = struct<h1,h2> dual-hash ids
     # for 10^12-file scale (collision n²/2¹²⁹)
     id_bits: int = 64
-    # bloom-style band prefilter: prune definitely-singleton band rows
-    # before the s4 blocking shuffle (pair set provably unchanged). None =
-    # off; e.g. 24 = 2^24 bitmap slots. Size so slot load stays ≪ 1.
-    band_prefilter_log2: int | None = None
 
     def fingerprint(self) -> str:
         return json.dumps(asdict(self), sort_keys=True)
@@ -213,7 +209,6 @@ class Pipeline:
             lambda: candidate_pairs(
                 blocks, id_col="fid", salt_cap=cfg.salt_cap, drop_cap=cfg.drop_cap,
                 persist_blocks=False,  # blocks already parquet-materialized
-                prefilter_log2_slots=cfg.band_prefilter_log2,
             ),
         )
         if stop_after == "s4_pairs":

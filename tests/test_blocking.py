@@ -1,9 +1,15 @@
 """Blocking: minhash determinism, blocking recall on true pairs, salting
-pair-set equivalence (FIXTURES.md §5)."""
+pair-set equivalence (FIXTURES.md §5), and candidate_pairs against the
+brute-force union of block cliques."""
 
 from __future__ import annotations
 
+from collections import defaultdict
+from itertools import combinations
+
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from record_matching_spark.operators.blocking import blocking_keys, candidate_pairs
@@ -73,99 +79,53 @@ def test_salting_pair_set_equivalence(blocks):
     assert salted.filter(F.col("left") >= F.col("right")).count() == 0
 
 
-def test_prefilter_pair_set_equivalence(blocks):
-    """The bloom-style band prefilter (duplicate_key_bitmap) must emit
-    EXACTLY the unfiltered pair set — it may only drop rows whose band key
-    is definitely singleton (VERDICT r3 item: the prefilter is conservative;
-    the exact census still decides). Tested at a deliberately TINY bitmap
-    (2^12 slots → heavy slot collisions) so the false-positive path is
-    exercised, and at a realistic width."""
-    base = candidate_pairs(blocks, salt_cap=1_000).select("left", "right")
-    for lg in (12, 20):
-        pre = candidate_pairs(
-            blocks, salt_cap=1_000, prefilter_log2_slots=lg
-        ).select("left", "right")
-        assert base.exceptAll(pre).count() == 0, f"lost pairs at log2={lg}"
-        assert pre.exceptAll(base).count() == 0, f"extra pairs at log2={lg}"
-
-
-def test_duplicate_key_bitmap_marks_all_dup_keys(spark):
-    """Every key that truly occurs ≥2 times (within or across partitions)
-    must be marked; singletons in empty slots must not be."""
-    import numpy as np
-
-    from record_matching_spark.operators.blocking import duplicate_key_bitmap
-
-    rows = ([("a", 5), ("b", 5)]            # dup within a partition
-            + [(f"s{i}", 1000 + i) for i in range(50)]  # singletons
-            + [("c", 77), ("d", 77)])       # dup (likely across partitions)
-    df = spark.createDataFrame(rows, "file_id string, block_key long").repartition(8)
-    bm, lg, stats = duplicate_key_bitmap(df, log2_slots=16)
-    # exact drop accounting: 50 singleton rows removable out of 54
-    assert stats["total_rows"] == 54
-    assert stats["dropped_rows"] == 50
-    assert abs(stats["drop_frac"] - 50 / 54) < 1e-12
-    bits = np.unpackbits(bm)
-    mask = (1 << lg) - 1
-    for k in (5, 77):
-        assert bits[k & mask] == 1
-    marked = int(bits.sum())
-    assert marked <= 2 + 50  # singletons only marked via (absent) collisions
-
-
-def test_prefilter_auto_decision(spark, monkeypatch):
-    """prefilter_log2_slots='auto' applies the (expensive) filter pass only
-    when the JVM-estimated singleton-row fraction clears the calibrated
-    threshold (0.95 — every measured lower fraction loses on this box,
-    BENCH.md): near-pure-singleton blocks → filter on; dup-dominated
-    blocks → filter skipped. Pair sets identical either way."""
-    import record_matching_spark.operators.blocking as B
-
-    calls = []
-    orig_bm = B.filter_blocks_by_bitmap
-    orig_sj = B.filter_blocks_by_slot_join
-
-    def spy_bm(*a, **k):
-        calls.append("bitmap")
-        return orig_bm(*a, **k)
-
-    def spy_sj(*a, **k):
-        calls.append("slot_join")
-        return orig_sj(*a, **k)
-
-    monkeypatch.setattr(B, "filter_blocks_by_bitmap", spy_bm)
-    monkeypatch.setattr(B, "filter_blocks_by_slot_join", spy_sj)
-
-    # 98% singleton rows → drop_frac ≈ 0.98 ≥ 0.95 → filter applied
-    high = spark.createDataFrame(
-        [(f"s{i}", 10_000 + i) for i in range(490)]
-        + [(f"d{i}", 20_000 + i // 2) for i in range(10)],
-        "file_id string, block_key long",
-    )
-    got = sorted(
-        (r["left"], r["right"])
-        for r in B.candidate_pairs(high, prefilter_log2_slots="auto").collect()
-    )
-    assert calls, "high-singleton corpus must trigger the filter"
-    want = sorted(
-        (r["left"], r["right"])
-        for r in B.candidate_pairs(high, prefilter_log2_slots=None).collect()
-    )
-    assert got == want
-
-    # every key duplicated → drop_frac 0 < threshold → filter skipped
-    calls.clear()
-    low = spark.createDataFrame(
-        [(f"d{i}", 30_000 + i // 2) for i in range(200)],
-        "file_id string, block_key long",
-    )
-    n = B.candidate_pairs(low, prefilter_log2_slots="auto").count()
-    assert not calls, "dup-dominated corpus must skip the filter"
-    assert n == 100
-
-
 def test_drop_cap_drops_mega_blocks(spark):
     rows = [(f"id{i}", "hot") for i in range(50)] + [("x", "cold"), ("y", "cold")]
     df = spark.createDataFrame(rows, "file_id string, block_key string")
     got = candidate_pairs(df, salt_cap=10, drop_cap=49)
     assert got.count() == 1  # only the cold pair survives
+
+
+_INT32 = 1 << 31
+
+
+@st.composite
+def _block_table(draw):
+    """(rows, salt_cap, persist_blocks) with rows = (id, block_key). Blocks
+    overlap, so a pair can repeat across blocks; a salt_cap of 1-3 leaves
+    most blocks larger than the cap, so they are salted. Ids are bigint,
+    either all inside the int32 range (the transport narrowing engages) or
+    spread far past it (it declines)."""
+    bound = draw(st.sampled_from([_INT32, 1 << 62]))
+    ids = draw(st.lists(st.integers(-bound, bound - 1), min_size=2,
+                        max_size=30, unique=True))
+    blocks = draw(st.lists(st.sets(st.sampled_from(ids), min_size=1, max_size=12),
+                           min_size=1, max_size=8))
+    rows = [(m, key) for key, members in enumerate(blocks) for m in members]
+    return rows, draw(st.sampled_from([1, 2, 3, 1000])), draw(st.booleans())
+
+
+@settings(max_examples=40, deadline=None)
+@given(case=_block_table())
+# every key unique: no block has two members, so no pairs
+@example(case=([(i, 1000 + i) for i in range(50)], 1000, True))
+# the int32 bounds themselves (narrowed), then one id just past either
+# bound (not narrowed)
+@example(case=([(-_INT32, 1), (_INT32 - 1, 1), (0, 1), (0, 2), (_INT32 - 1, 2)], 2, True))
+@example(case=([(_INT32, 1), (0, 1), (5, 1), (5, 2), (_INT32, 2)], 2, True))
+@example(case=([(-_INT32 - 1, 1), (0, 1), (5, 1), (5, 2), (-_INT32 - 1, 2)], 2, True))
+def test_candidate_pairs_equals_clique_union(spark, case):
+    """candidate_pairs = the distinct union over blocks of all member pairs
+    (left < right), ids in their input type, each pair exactly once."""
+    rows, salt_cap, persist = case
+    members = defaultdict(set)
+    for i, key in rows:
+        members[key].add(i)
+    want = {p for m in members.values() for p in combinations(sorted(m), 2)}
+
+    blocks = spark.createDataFrame(rows, "file_id long, block_key long")
+    pairs = candidate_pairs(blocks, salt_cap=salt_cap, persist_blocks=persist)
+    assert pairs.dtypes == [("left", "bigint"), ("right", "bigint")]
+    got = [(r["left"], r["right"]) for r in pairs.collect()]
+    assert len(got) == len(set(got)), "duplicate pairs"
+    assert set(got) == want

@@ -1,6 +1,6 @@
-"""Round-5 gates. First batch: ADVICE r4 fixes (empty-dup-slot prefilter,
-NUL-safe JW dedupe), the vectorized codepoint padding (VERDICT item 7),
-lazy hyperplane planes (item 6), C4-style line-level dedup (item 2),
+"""Round-5 gates. First batch: ADVICE r4 fix (NUL-safe JW dedupe), the
+vectorized codepoint padding (VERDICT item 7), lazy hyperplane planes
+(item 6), C4-style line-level dedup (item 2),
 Gopher repetition signals (item 3), the embedding near-dup LSH scale path
 (item 4), the mid-stage-kill manifest gate (item 8), span decontamination,
 PII scrub, substring dedup, packing, JSONL, HTML extraction, streaming
@@ -23,34 +23,6 @@ from pyspark.sql import functions as F
 
 
 # ----------------------------------------------------------- ADVICE fixes
-
-
-def test_prefilter_all_singleton_empty_dup_slots(spark):
-    """ADVICE r4 (medium): a 100%-singleton-key corpus produces an EMPTY
-    dup-slot set; both the explicit-slots and the auto prefilter paths must
-    return zero pairs instead of crashing on empty-schema inference."""
-    from record_matching_spark.operators.blocking import (
-        candidate_pairs, duplicate_key_bitmap, filter_blocks_by_slot_join,
-    )
-
-    blocks = spark.createDataFrame(
-        [(i, i * 1000 + 7) for i in range(200)], "fid long, block_key long"
-    ).localCheckpoint(eager=True)
-    # direct unit: empty dup_slots short-circuits to an always-false filter
-    _, lg, stats = duplicate_key_bitmap(blocks, log2_slots=20)
-    assert stats["n_dup_slots"] == 0
-    assert (
-        filter_blocks_by_slot_join(blocks, stats["dup_slots"], lg).count() == 0
-    )
-    # explicit slots engage the prefilter unconditionally
-    assert candidate_pairs(blocks, id_col="fid", prefilter_log2_slots=20).count() == 0
-    # auto mode with a cleared threshold engages on exactly this regime
-    assert (
-        candidate_pairs(
-            blocks, id_col="fid", prefilter_log2_slots="auto",
-            prefilter_auto_min_drop=0.5,
-        ).count() == 0
-    )
 
 
 def test_jw_batch_nul_strings():

@@ -5,8 +5,8 @@ internals is pinned to the round-5 semantics here.
   the round-5 shuffle shape kept as the >1M-docs fallback — both paths must
   produce the same table.
 - candidate_pairs deduplicates with an exchange-first shape (repartition by
-  pair key, then aggregate) — the pair set AND the min-block_key provenance
-  must equal the raw stream's.
+  pair key, then distinct) — pinned against the brute-force clique union by
+  tests/test_blocking.py::test_candidate_pairs_equals_clique_union.
 - connected components dropped large-star's per-round distinct — component
   assignments on duplicate-heavy / high-diameter graphs must be exact.
 - minhash_near_dup_pairs verifies via |A∪B| = |A|+|B|−|A∩B| with a split
@@ -18,10 +18,6 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-
-def _rows(df, cols):
-    return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
 def test_sha_features_paths_agree(spark, monkeypatch):
@@ -72,36 +68,6 @@ def test_sha_features_paths_agree(spark, monkeypatch):
     for sha, (_, tid, tw) in nf.items():
         if tw:
             assert sum(w * w for w in tw) == pytest.approx(1.0, abs=1e-5)
-
-
-def test_candidate_pairs_dedup_equals_raw(spark):
-    """Exchange-first dedup must emit exactly the distinct raw pair set,
-    and keep_block_key=True must carry the MIN shared block key (the
-    round-5 groupBy contract) — checked against a brute-force dedup of the
-    dedup=False stream on a block table with cross-band duplicate pairs."""
-    from record_matching_spark.operators.blocking import candidate_pairs
-
-    rows = []
-    # three "bands": docs 1-4 share key 100; 1,2 also share 50; 3,4 share 7
-    for k, members in [(100, [1, 2, 3, 4]), (50, [1, 2]), (7, [3, 4]),
-                       (900, [5, 6, 7]), (3, [6, 7])]:
-        rows += [(m, k) for m in members]
-    blocks = spark.createDataFrame(rows, "file_id long, block_key long")
-    raw = candidate_pairs(blocks, salt_cap=2, dedup=False).collect()
-    want = {}
-    for r in raw:
-        key = (r["left"], r["right"])
-        want[key] = min(want.get(key, r["block_key"]), r["block_key"])
-    got = {
-        (r["left"], r["right"]): r["block_key"]
-        for r in candidate_pairs(blocks, salt_cap=2).collect()
-    }
-    assert got == want
-    got_pairs = _rows(
-        candidate_pairs(blocks, salt_cap=2, keep_block_key=False),
-        ["left", "right"],
-    )
-    assert got_pairs == sorted(want)
 
 
 def test_cc_exact_on_dup_heavy_graph(spark):
